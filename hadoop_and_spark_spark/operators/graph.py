@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..sources.maintenance import artifact_checkpoint
+from ..sources.maintenance import artifact_checkpoint, session_memo
 
 ALPHA = 0.15  # jump factor, a4/RunPersonalizedPageRankBasic.java:364
 PR_SOURCES = (0, 1)
@@ -241,10 +241,6 @@ def lineitem_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RANKS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_RANKS_CACHE_LOCKS: dict[tuple[str, str], object] = {}
-
-
 def converged_lineitem_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Converged testdata-graph ranks, computed ONCE per
     (session, corpus) and shared by both registered queries — the
@@ -252,41 +248,24 @@ def converged_lineitem_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes converged ranks to HDFS and
     ExtractTopPersonalizedPageRankNodes.java:59-153 reads that stored
     output instead of re-iterating. Here the handoff is an eagerly
-    localCheckpoint'ed PR_NUM_NODES-row frame memoized per
-    applicationId (a stopped session invalidates checkpoint blocks,
-    so a new session recomputes under a new key).
+    localCheckpoint'ed PR_NUM_NODES-row frame held in the session memo
+    (maintenance.session_memo): a stopped session invalidates
+    checkpoint blocks, so a new session recomputes under a new key,
+    and the source_marker in the key invalidates the ranks when the
+    lineitem table is rewritten in-place.
 
     partitions=4 aligns the cached graph with gather_partitions so
     each per-iteration job schedules a handful of tasks, not
     spark.sql.shuffle.partitions of them (toy graph; at real scale
     both parameters grow with the cluster)."""
-    from ..sources.maintenance import source_marker
 
-    # source_marker (path + mtime + size) in the key: an in-place
-    # rewrite of the lineitem table invalidates the memoized ranks
-    # instead of serving a stale converged frame (build_once
-    # staleness discipline).
-    key = (
-        spark.sparkContext.applicationId,
-        source_marker(sf_dir, "lineitem", "ppr_v1"),
-    )
-    from ..sources.maintenance import _keyed_lock, cache_get, insert_evicting
+    def build() -> DataFrame:
+        graph = lineitem_graph(spark, sf_dir)
+        return personalized_pagerank(
+            graph, partitions=4, gather_partitions=4
+        ).localCheckpoint(eager=True)
 
-    # Per-key lock (maintenance._keyed_lock): both registered PageRank
-    # queries may now arrive on concurrent sweep threads; one trains,
-    # the other waits and reads the checkpointed ranks. Mutation goes
-    # through insert_evicting so the shared _CACHE_LOCK covers this
-    # dict too (an in-place lineitem rewrite also evicts the stale
-    # ranks entry instead of leaking its checkpoint blocks).
-    with _keyed_lock(_RANKS_CACHE_LOCKS, key):
-        ranks = cache_get(_RANKS_CACHE, key)
-        if ranks is None:
-            graph = lineitem_graph(spark, sf_dir)
-            ranks = personalized_pagerank(
-                graph, partitions=4, gather_partitions=4
-            ).localCheckpoint(eager=True)
-            insert_evicting(_RANKS_CACHE, key, ranks)
-    return ranks
+    return session_memo(spark, sf_dir, "lineitem", "ppr_v1", build)
 
 
 def personalized_pagerank_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -359,11 +359,17 @@ def q9_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-flag prefix-sum window over the bucket TOTALS (≤ domain/width
     rows, broadcast back onto the histogram). cum/lo/n are sums of
     longs grouped identically either way, so results are
-    bit-identical to the single-window form (equality-gated in
-    tools/ab_r13.py before promotion): floor(price/width) is monotone
-    in price, so (b asc, price asc within b) IS global price order,
-    and a NULL price folds into the NULLs-first bucket both levels
-    order first.
+    bit-identical to the single-window form (equality-gated before
+    promotion; the harness is ``git show 3e6e3d8:tools/ab_r13.py``):
+    floor(price/width) is monotone in price, so (b asc, price asc
+    within b) IS global price order.
+
+    NULL contract: the offsets are attached with an INNER join on
+    (l_returnflag, b), and NULL never equals NULL, so a histogram row
+    with a NULL price (NULL b) or a NULL flag finds no offset row and
+    is dropped. The plan relies on lineitem's NOT NULL l_extendedprice
+    and l_returnflag columns; it does not give a NULL price or flag a
+    bucket or a group of its own.
 
     Interpolation mirrors Spark's own Percentile.getPercentile
     arithmetic exactly — pos = p·(n−1), lower/higher bracketing

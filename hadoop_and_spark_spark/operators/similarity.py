@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.portable import dot_fold, dot_fold_sql, let_col, round6, round6_sql
 from ..session import fan_out
-from ..sources.maintenance import artifact_checkpoint
+from ..sources.maintenance import artifact_checkpoint, session_memo
 
 EMB_DIM = 64
 K_NN = 10
@@ -183,14 +183,6 @@ def _assign_rows(
     return out.select(*cols, F.col("b.cid").alias("cid"))
 
 
-_IVF_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-_PERSISTED_CENT_CACHE: dict[tuple[str, str], list] = {}
-# Per-key locks (maintenance._keyed_lock): queries sharing a model
-# may now arrive on concurrent sweep threads; one builds, the rest
-# wait and read.
-_MODEL_LOCKS: dict[tuple[str, str], object] = {}
-
-
 def _session_ivf_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, list[float], float]], DataFrame]:
@@ -198,37 +190,24 @@ def _session_ivf_index(
     ONCE per (session, corpus) — the serving contract of an ANN index
     (built once, every query seeks) and the same phase-handoff memo as
     _trained_model / converged_lineitem_ranks. The source_marker in
-    the key invalidates the memo when the embeddings table is
-    rewritten in-place. Cold build cost is published honestly by
-    tools/scaling_probe.py, which clears this cache per timed run."""
-    from ..sources.maintenance import (
-        _keyed_lock,
-        cache_get,
-        insert_evicting,
-        source_marker,
-    )
+    the session_memo key invalidates the memo when the embeddings
+    table is rewritten in-place. Cold build cost is published honestly
+    by tools/scaling_probe.py, which clears the session memo per timed
+    run."""
 
-    key = (
-        spark.sparkContext.applicationId,
-        source_marker(sf_dir, "embeddings", "ivf_mem_v1"),
-    )
-    with _keyed_lock(_MODEL_LOCKS, key):
-        hit = cache_get(_IVF_CACHE, key)
-        if hit is None:
-            vec = _vectors(spark, sf_dir)
-            cent_rows = [
-                (int(r.cid), list(r.c_emb), float(r.c_nrm))
-                for r in _centroids(vec).orderBy("cid").collect()
-            ]
-            # Materialized once: this is the step that WRITES the
-            # inverted file on a cluster (knn_ivf_persisted is exactly
-            # that); localCheckpoint is its in-session stand-in.
-            assigned = _assign_rows(vec, cent_rows).transform(
-                artifact_checkpoint
-            )
-            hit = (cent_rows, assigned)
-            insert_evicting(_IVF_CACHE, key, hit)
-    return hit
+    def build():
+        vec = _vectors(spark, sf_dir)
+        cent_rows = [
+            (int(r.cid), list(r.c_emb), float(r.c_nrm))
+            for r in _centroids(vec).orderBy("cid").collect()
+        ]
+        # Materialized once: this is the step that WRITES the
+        # inverted file on a cluster (knn_ivf_persisted is exactly
+        # that); localCheckpoint is its in-session stand-in.
+        assigned = _assign_rows(vec, cent_rows).transform(artifact_checkpoint)
+        return cent_rows, assigned
+
+    return session_memo(spark, sf_dir, "embeddings", "ivf_mem_v1", build)
 
 
 def _cent_frame(spark: SparkSession, cent_rows) -> DataFrame:
@@ -575,9 +554,6 @@ def _model_rows(
     return out
 
 
-_KMEANS_CACHE: dict[tuple[str, str], tuple[list, list, DataFrame]] = {}
-
-
 def _trained_model(spark: SparkSession, sf_dir: str):
     """(centroid model rows, objective history, checkpointed
     raw-cosine assignment carrying best_cos), trained ONCE per
@@ -592,51 +568,39 @@ def _trained_model(spark: SparkSession, sf_dir: str):
     (only the model rows differ) and the oracle replays it with the
     shared search-SQL body.
 
-    The key folds in ``source_marker`` (path + mtime + size), the
-    build_once staleness discipline: rewriting the embeddings table
-    in-place during a long-lived session invalidates the memo instead
-    of serving a model trained on the old corpus."""
-    from ..sources.maintenance import (
-        _keyed_lock,
-        cache_get,
-        insert_evicting,
-        source_marker,
-    )
+    The session_memo key folds in ``source_marker`` (path + mtime +
+    size), the build_once staleness discipline: rewriting the
+    embeddings table in-place during a long-lived session invalidates
+    the memo instead of serving a model trained on the old corpus."""
 
-    key = (
-        spark.sparkContext.applicationId,
-        source_marker(sf_dir, "embeddings", "kmeans_v2"),
-    )
-    with _keyed_lock(_MODEL_LOCKS, key):
-        hit = cache_get(_KMEANS_CACHE, key)
-        if hit is None:
-            qvec = _train_vectors(spark, sf_dir).transform(artifact_checkpoint)
-            # Size iteration tasks to the DATA, not the session: the
-            # trainer runs 4 kernel jobs over this frame, and at
-            # small corpora 32 tasks of ~150 rows are pure scheduling
-            # + Python-worker overhead (profiled: the Lloyd's loop was
-            # 2.8 s of the 5 s sf0.1 cold path, mostly task overhead
-            # — the round-9 "cold regression" the round-10 profile
-            # traced). ~64k rows per task; a corpus big enough to
-            # fill the session's parallelism keeps it (coalesce only
-            # ever narrows). Training output is partition-INVARIANT
-            # by the integer-exactness design (pinned in
-            # test_kmeans_training_is_partition_invariant), so this
-            # is a pure scheduling choice, never a result change.
-            n_rows = qvec.count()  # cheap: checkpointed frame
-            p = max(1, min(
-                spark.sparkContext.defaultParallelism, -(-n_rows // 65536)
-            ))
-            if p < qvec.rdd.getNumPartitions():
-                qvec = qvec.coalesce(p)
-            cents, hist = train_spherical_kmeans(qvec)
-            model = _model_rows(cents)
-            assigned = _assign_rows(
-                _vectors(spark, sf_dir), model, with_cos=True
-            ).transform(artifact_checkpoint)
-            hit = (model, hist, assigned)
-            insert_evicting(_KMEANS_CACHE, key, hit)
-    return hit
+    def build():
+        qvec = _train_vectors(spark, sf_dir).transform(artifact_checkpoint)
+        # Size iteration tasks to the DATA, not the session: the
+        # trainer runs 4 kernel jobs over this frame, and at
+        # small corpora 32 tasks of ~150 rows are pure scheduling
+        # + Python-worker overhead (profiled: the Lloyd's loop was
+        # 2.8 s of the 5 s sf0.1 cold path, mostly task overhead
+        # — the round-9 "cold regression" the round-10 profile
+        # traced). ~64k rows per task; a corpus big enough to
+        # fill the session's parallelism keeps it (coalesce only
+        # ever narrows). Training output is partition-INVARIANT
+        # by the integer-exactness design (pinned in
+        # test_kmeans_training_is_partition_invariant), so this
+        # is a pure scheduling choice, never a result change.
+        n_rows = qvec.count()  # cheap: checkpointed frame
+        p = max(1, min(
+            spark.sparkContext.defaultParallelism, -(-n_rows // 65536)
+        ))
+        if p < qvec.rdd.getNumPartitions():
+            qvec = qvec.coalesce(p)
+        cents, hist = train_spherical_kmeans(qvec)
+        model = _model_rows(cents)
+        assigned = _assign_rows(
+            _vectors(spark, sf_dir), model, with_cos=True
+        ).transform(artifact_checkpoint)
+        return model, hist, assigned
+
+    return session_memo(spark, sf_dir, "embeddings", "kmeans_v2", build)
 
 
 def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,20 +715,19 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so serving depends only on the persisted artifact, never on a
     # fresh corpus scan. Memoized per index marker: serving loads the
     # model once alongside the index, not once per query.
-    from ..sources.maintenance import _keyed_lock, cache_get, insert_evicting
-
-    ckey = (spark.sparkContext.applicationId, marker)
-    with _keyed_lock(_MODEL_LOCKS, ckey):
-        cent_rows = cache_get(_PERSISTED_CENT_CACHE, ckey)
-        if cent_rows is None:
-            cent_rows = [
-                (int(r.vec_id), list(r.emb), float(r.nrm))
-                for r in idx.where(F.col("vec_id") < NCENTROIDS)
-                .select("vec_id", "emb", "nrm")
-                .orderBy("vec_id")
-                .collect()
-            ]
-            insert_evicting(_PERSISTED_CENT_CACHE, ckey, cent_rows)
+    cent_rows = session_memo(
+        spark,
+        sf_dir,
+        "embeddings",
+        "ivf_v1",
+        lambda: [
+            (int(r.vec_id), list(r.emb), float(r.nrm))
+            for r in idx.where(F.col("vec_id") < NCENTROIDS)
+            .select("vec_id", "emb", "nrm")
+            .orderBy("vec_id")
+            .collect()
+        ],
+    )
     return _ivf_search(_cent_frame(spark, cent_rows), idx)
 
 
@@ -985,8 +948,6 @@ def _pca_components(spark: SparkSession, sf_dir: str):
     scale). Returns (components [k×d], rayleigh values, n) — the
     components are bit-identical to the DuckDB oracle's, see the
     module constants."""
-
-    from ..sources.maintenance import session_memo
 
     def build():
         G, s, n, _maxq = _collect_pca_stats(_pca_vectors(spark, sf_dir))

@@ -110,13 +110,12 @@ def build_once(out_path: str, marker: str, build) -> bool:
 _SESSION_MEMO: dict[tuple[str, str], object] = {}
 _MEMO_LOCKS: dict[tuple[str, str], object] = {}
 
-# Guards ITERATION + MUTATION of every shared artifact cache (the
-# session memo here and the similarity-module model caches). The
-# per-KEY locks above serialize same-artifact builds but still allow
-# thread A to insert key X while thread B's evict_superseded iterates
-# the same dict for key Y — CPython raises 'dictionary changed size
-# during iteration'. All cache inserts/evictions/clears take THIS
-# lock; it is never held across a Spark call (unpersist runs outside).
+# Guards ITERATION + MUTATION of the session memo. The per-KEY locks
+# above serialize same-artifact builds but still allow thread A to
+# insert key X while thread B's eviction scan iterates the same dict
+# for key Y — CPython raises 'dictionary changed size during
+# iteration'. All memo inserts/evictions/clears take THIS lock; it is
+# never held across a Spark call (unpersist runs outside).
 _CACHE_LOCK = threading.Lock()
 
 # Total session_memo calls (hits AND builds). bench.py diffs this
@@ -126,25 +125,14 @@ MEMO_TOUCHES = 0
 
 
 def clear_session_caches() -> None:
-    """Clear EVERY in-session derived-artifact cache: the central
-    session memo plus the module-local model caches (IVF centroids,
-    k-means models, converged PageRank). Used by bench.py and
-    tools/scaling_probe.py to price COLD runs honestly; persisted
-    on-disk artifacts (build_once markers) are deliberately left —
-    those are built once across sessions by contract."""
-    from ..operators.graph import _RANKS_CACHE
-    from ..operators.similarity import (
-        _IVF_CACHE,
-        _KMEANS_CACHE,
-        _PERSISTED_CENT_CACHE,
-    )
-
+    """Clear the in-session derived-artifact cache (the session memo,
+    which holds every in-session model, index and checkpointed
+    artifact). Used by bench.py and tools/scaling_probe.py to price
+    COLD runs honestly; persisted on-disk artifacts (build_once
+    markers) are deliberately left — those are built once across
+    sessions by contract."""
     with _CACHE_LOCK:
         _SESSION_MEMO.clear()
-        _IVF_CACHE.clear()
-        _KMEANS_CACHE.clear()
-        _PERSISTED_CENT_CACHE.clear()
-        _RANKS_CACHE.clear()
 
 
 def _try_unpersist(obj) -> None:
@@ -184,41 +172,16 @@ def _pop_superseded(cache: dict, key: tuple[str, str]) -> list:
     return victims
 
 
-def evict_superseded(cache: dict, key: tuple[str, str]) -> None:
-    """Drop cache entries for the same (applicationId, table path,
-    artifact version) as ``key`` but a DIFFERENT source mtime/size —
-    i.e. entries superseded by an in-place table rewrite. Without this
-    every rewrite would leak the old entry (and its localCheckpoint
-    blocks) for the application lifetime. Shared by the central
-    session_memo and the similarity-module model caches.
-
-    Iterates under _CACHE_LOCK: concurrent sweep threads holding
-    OTHER keys' build locks may insert into the same dict, and an
-    unlocked scan races their resize. The superseded values'
-    unpersist (a Py4J call) runs after the lock is released.
-
-    NOTE for new build sites: use ``insert_evicting`` (evict + insert
-    as one atomic mutation) — calling this function followed by a
-    bare dict insert reopens the window it closes."""
-    with _CACHE_LOCK:
-        victims = _pop_superseded(cache, key)
-    for v in victims:
-        _try_unpersist(v)
-
-
-def cache_get(cache: dict, key):
-    """Shared-cache read under _CACHE_LOCK (a bare dict.get is safe in
-    CPython, but taking the lock keeps every access to these dicts on
-    one discipline and costs nothing off the contended path)."""
-    with _CACHE_LOCK:
-        return cache.get(key)
-
-
 def insert_evicting(cache: dict, key: tuple[str, str], value) -> None:
-    """The evict-superseded + insert pair as ONE atomic cache
-    mutation — every shared-cache build site uses this, so no window
-    exists where a concurrent same-table build could slip a second
-    entry in between the eviction scan and the insert."""
+    """Insert ``value`` under ``key`` and drop every entry for the same
+    (applicationId, table path, artifact version) but a DIFFERENT
+    source mtime/size — i.e. entries superseded by an in-place table
+    rewrite — as ONE atomic cache mutation. Without the eviction every
+    rewrite would leak the old entry (and its localCheckpoint blocks)
+    for the application lifetime; doing both under _CACHE_LOCK leaves
+    no window where a concurrent same-table build could slip a second
+    entry in between the eviction scan and the insert. The superseded
+    values' unpersist (a Py4J call) runs after the lock is released."""
     with _CACHE_LOCK:
         victims = _pop_superseded(cache, key)
         cache[key] = value
@@ -259,16 +222,26 @@ def artifact_checkpoint(df, eager: bool = True):
 
 def session_memo(spark: SparkSession, sf_dir: str, table: str, version: str, build):
     """In-session twin of ``build_once``: memoize a derived artifact
-    (checkpointed frame, trained model, pair graph) per
-    (applicationId, source_marker) — the phase-handoff pattern the
-    PageRank/k-means/IVF memos share, centralized. The source marker
+    (checkpointed frame, trained model, pair graph, IVF index,
+    converged PageRank ranks) per (applicationId, source_marker) —
+    the ONE in-session phase-handoff cache. The source marker
     (path + mtime_ns + size) invalidates the memo when the source
     table is rewritten in-place, and inserting the fresh entry EVICTS
     the superseded one (same app/table/version, older marker) so dead
     checkpoint blocks don't accumulate across rewrites; a new session
     starts cold (checkpoint blocks die with the application).
-    tools/scaling_probe.py clears this dict so published cold numbers
-    include the build."""
+    clear_session_caches() empties it so published cold numbers
+    include the build.
+
+    Registry sweeps run queries on concurrent threads, so every piece
+    of cross-query shared state is guarded at its own source: this
+    memo and build_once (per-key locks, so distinct artifacts still
+    build in parallel), the replay shuffle-partition pin
+    (streaming/runtime.py, refcounted), the memory-sink sequence
+    (trending._SEQ_LOCK) and scoped SQL-conf mutation
+    (catalog._CONF_LOCK). A new in-session artifact cache MUST be a
+    session_memo call; any other new module-level mutable cache MUST
+    take a per-key lock like this one."""
     global MEMO_TOUCHES
     MEMO_TOUCHES += 1
     key = (spark.sparkContext.applicationId, source_marker(sf_dir, table, version))

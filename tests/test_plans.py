@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from hadoop_and_spark_spark.operators import relational as R
 from hadoop_and_spark_spark.operators import text as T
@@ -207,7 +208,10 @@ def test_q9_histogram_plan_is_domain_bounded(spark, sf_dir):
     for spec in p.split("windowspecdefinition(")[1:]:
         keys = spec.split(" ASC")[0]
         if "l_extendedprice" in spec.split("specifiedwindowframe")[0]:
-            assert ("l_returnflag" not in keys) or ("b#" in keys), spec
+            has_bucket = any(
+                re.match(r"\bb#\d+", k.strip()) for k in keys.split(",")
+            )
+            assert ("l_returnflag" not in keys) or has_bucket, spec
     read_schema = p.split("ReadSchema")[1].splitlines()[0]
     assert "l_extendedprice" in read_schema and "l_comment" not in read_schema
 

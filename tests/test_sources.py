@@ -542,11 +542,55 @@ def test_session_memo_evicts_superseded_entries(spark, sf_dir, tmp_path):
     assert len(matching) == 1, matching  # superseded entry evicted
 
 
-def test_evict_superseded_unpersists_stale_values():
-    """The eviction helper must release the superseded value's cached
-    blocks (DataFrames directly or inside tuples) and leave unrelated
-    entries alone."""
-    from hadoop_and_spark_spark.sources.maintenance import evict_superseded
+# Trained models, IVF indexes and converged ranks: query -> the
+# (source table, artifact version) of the session memo it serves from.
+MODEL_MEMOS = {
+    "knn_ivf": ("embeddings", "ivf_mem_v1"),
+    "knn_ivf_persisted": ("embeddings", "ivf_v1"),
+    "kmeans_centroids": ("embeddings", "kmeans_v2"),
+    "knn_ivf_kmeans": ("embeddings", "kmeans_v2"),
+    "personalized_pagerank": ("lineitem", "ppr_v1"),
+    "pagerank_top_nodes": ("lineitem", "ppr_v1"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(MODEL_MEMOS))
+def test_model_artifacts_are_session_memos(spark, sf_dir, name):
+    """Model and index artifacts go through session_memo, like every
+    other in-session artifact: each call counts in MEMO_TOUCHES (bench
+    detects memoized queries from it), a repeat call is served the
+    identical memo object, and clear_session_caches() forces a
+    rebuild."""
+    from hadoop_and_spark_spark.registry import collect
+    from hadoop_and_spark_spark.sources import maintenance as m
+
+    fn = collect()[0][name]
+    key = (
+        spark.sparkContext.applicationId,
+        m.source_marker(sf_dir, *MODEL_MEMOS[name]),
+    )
+
+    touches = m.MEMO_TOUCHES
+    fn(spark, sf_dir)
+    assert m.MEMO_TOUCHES > touches
+    first = m._SESSION_MEMO[key]
+
+    touches = m.MEMO_TOUCHES
+    fn(spark, sf_dir)
+    assert m.MEMO_TOUCHES > touches
+    assert m._SESSION_MEMO[key] is first
+
+    m.clear_session_caches()
+    assert key not in m._SESSION_MEMO
+    fn(spark, sf_dir)
+    assert m._SESSION_MEMO[key] is not first  # the build ran again
+
+
+def test_insert_evicting_unpersists_stale_values():
+    """Inserting a fresh entry must release the superseded value's
+    cached blocks (DataFrames directly or inside tuples) and leave
+    unrelated entries alone."""
+    from hadoop_and_spark_spark.sources.maintenance import insert_evicting
 
     class Frame:
         def __init__(self):
@@ -561,8 +605,7 @@ def test_evict_superseded_unpersists_stale_values():
         ("app", "/t/other.parquet|1|10|v1"): other,
     }
     new_key = ("app", "/t/docs.parquet|2|11|v1")
-    evict_superseded(cache, new_key)
-    cache[new_key] = fresh
+    insert_evicting(cache, new_key, fresh)
     assert stale.released and not other.released and not fresh.released
     assert ("app", "/t/docs.parquet|1|10|v1") not in cache
     assert ("app", "/t/other.parquet|1|10|v1") in cache
@@ -630,7 +673,7 @@ def test_scoped_conf_is_thread_safe(spark):
 
 
 def test_cache_mutation_is_safe_under_concurrent_inserts():
-    """Round-9 advice: evict_superseded iterated a shared cache dict
+    """Round-9 advice: the eviction scan iterated a shared cache dict
     while per-KEY locks still allowed a thread holding a DIFFERENT
     key's lock to insert concurrently — CPython raises 'dictionary
     changed size during iteration'. All mutation now goes through
@@ -639,10 +682,7 @@ def test_cache_mutation_is_safe_under_concurrent_inserts():
     (the unlocked form fails this reliably at these sizes)."""
     import threading
 
-    from hadoop_and_spark_spark.sources.maintenance import (
-        evict_superseded,
-        insert_evicting,
-    )
+    from hadoop_and_spark_spark.sources.maintenance import insert_evicting
 
     cache: dict = {}
     errs: list[str] = []
@@ -652,8 +692,10 @@ def test_cache_mutation_is_safe_under_concurrent_inserts():
             for i in range(300):
                 key = ("app", f"/t/tab{tid}_{i % 7}.parquet|{i}|{i}|v1")
                 insert_evicting(cache, key, object())
-                evict_superseded(
-                    cache, ("app", f"/t/tab{tid}_{i % 7}.parquet|{i + 1}|{i}|v1")
+                insert_evicting(
+                    cache,
+                    ("app", f"/t/tab{tid}_{i % 7}.parquet|{i + 1}|{i}|v1"),
+                    object(),
                 )
         except Exception as exc:  # noqa: BLE001
             errs.append(repr(exc))

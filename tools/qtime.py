@@ -1,18 +1,33 @@
-"""Isolated per-query timing (guide §1): one warm-up pass, then N
-interleaved timed passes over the named queries, min per query —
-bench.py's protocol scoped to a few queries for optimization work.
+"""Isolated per-query timing and equality-gated A/B (guide §1): one
+warm-up pass, then N interleaved timed passes over the named entries,
+min per entry — bench.py's protocol scoped to a few queries for
+optimization work.
 
-Usage: python tools/qtime.py [-n PASSES] <query> [query ...]
+Usage: python tools/qtime.py [-n PASSES] [--noop] <entry> [entry ...]
+  entry: a registered query name, or ``pkg.module:function`` — a
+  candidate variant with the query signature (spark, sf_dir) ->
+  DataFrame, imported from the repo root or PYTHONPATH.
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
+
+Equality gate: the warm-up pass collects every entry, and each
+variant's sorted rows must equal those of the first registered query
+in the list before any timing; a mismatch, or a variant with no
+registered query to compare against, exits non-zero. A faster but
+different variant can therefore never be timed.
 
 Times .collect() (the bench action) so numbers are comparable with
 BENCH_QUERIES.json rows; pass --noop to time a noop-sink write
 instead (computes every column, excludes driver row transfer).
+
+Every invocation runs in its own Spark job group, so each row also
+reports the jobs one invocation starts (its actions plus the stage
+jobs AQE submits). Prints {entry: {"min_s": ..., "jobs": ...}}.
 """
 
 from __future__ import annotations
 
 import gc
+import importlib
 import json
 import os
 import sys
@@ -24,6 +39,21 @@ from hadoop_and_spark_spark.registry import collect
 from hadoop_and_spark_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _resolve(entry: str, queries: dict):
+    """A registered query by name, or a ``pkg.module:function``
+    variant imported by path."""
+    if ":" not in entry:
+        return queries[entry]
+    modname, fname = entry.split(":", 1)
+    return getattr(importlib.import_module(modname), fname)
+
+
+def _sorted_rows(rows) -> list:
+    # repr as the sort key: rows may mix NULLs with values, which
+    # tuples cannot order directly.
+    return sorted((tuple(r) for r in rows), key=repr)
 
 
 def main() -> int:
@@ -38,31 +68,71 @@ def main() -> int:
         noop = True
         args.remove("--noop")
     names = args
-    spark = get_spark("qtime")
     queries, _ = collect()
+    fns = {name: _resolve(name, queries) for name in names}
+    variants = [name for name in names if ":" in name]
+    ref = next((name for name in names if ":" not in name), None)
+    if variants and ref is None:
+        print(f"no registered query to gate {variants} against", file=sys.stderr)
+        return 2
 
-    def run(name: str) -> float:
+    spark = get_spark("qtime")
+    sc = spark.sparkContext
+
+    def group(name: str, p: int) -> str:
+        return f"qtime:{name}#{p}"
+
+    def run(name: str, p: int) -> float:
         gc.collect()
-        spark.sparkContext.setJobDescription(f"qtime: {name}")
+        sc.setJobGroup(group(name, p), group(name, p))
         t0 = time.perf_counter()
-        df = queries[name](spark, SF_DIR)
+        df = fns[name](spark, SF_DIR)
         if noop:
             df.write.format("noop").mode("overwrite").save()
         else:
             df.collect()
         return time.perf_counter() - t0
 
-    # warm-up (codegen + build-once artifacts + worker pool)
+    # warm-up (codegen + build-once artifacts + worker pool); the
+    # entries' own warm-up runs are the equality gate's collects
     spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).count()
-    ncpu = spark.sparkContext.defaultParallelism
+    ncpu = sc.defaultParallelism
     spark.range(ncpu, numPartitions=ncpu).mapInPandas(
         lambda it: (pdf for pdf in it), "id long"
     ).count()
-    for name in names:
-        run(name)
-    passes = [{name: run(name) for name in names} for _ in range(n_passes)]
+    rows = {name: _sorted_rows(fns[name](spark, SF_DIR).collect()) for name in names}
+    for name in variants:
+        same = rows[name] == rows[ref]
+        print(f"equal[{name} vs {ref}]: {same}", file=sys.stderr, flush=True)
+        if not same:
+            want, got = rows[ref], rows[name]
+            i = next(
+                (i for i, (a, b) in enumerate(zip(want, got)) if a != b),
+                min(len(want), len(got)),
+            )
+            print(
+                f"  {len(want)} vs {len(got)} rows; from sorted row {i}:\n"
+                f"  REF {want[i : i + 3]}\n  GOT {got[i : i + 3]}",
+                file=sys.stderr,
+            )
+            spark.stop()
+            return 1
+    del rows
+
+    passes = [{name: run(name, p) for name in names} for p in range(n_passes)]
+    # Job starts reach the status tracker through the asynchronous
+    # listener bus, so counts are read after all passes and the max
+    # over passes is reported (a lagging read can only under-count).
+    tracker = sc.statusTracker()
     out = {
-        name: round(min(p[name] for p in passes), 3) for name in names
+        name: {
+            "min_s": round(min(p[name] for p in passes), 3),
+            "jobs": max(
+                len(tracker.getJobIdsForGroup(group(name, p)))
+                for p in range(n_passes)
+            ),
+        }
+        for name in names
     }
     print(json.dumps(out, indent=1))
     spark.stop()
