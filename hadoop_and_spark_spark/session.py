@@ -21,6 +21,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Streaming checkpoint manager (internal conf key; tests/test_streaming.py
+# guards that the class loads and that Spark builds it for local paths).
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     """Round-robin repartition IFF the plan has fewer partitions than
@@ -222,5 +229,23 @@ def get_spark(
         # catalog (micro truncation can't move a window bucket).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Streaming checkpoints through Hadoop's FileSystem API, not the
+        # FileContext default. The master is always local[N], so every
+        # checkpoint is on local disk, and without Hadoop's native
+        # library RawLocalFileSystem forks a shell process for file
+        # metadata: FileContext's rename resolves the link status of
+        # both paths (a `readlink` fork each), so one cold
+        # event_count_hourly_stream run forked 692 processes, 544 of
+        # them readlink (JFR jdk.ProcessStart, 4 cores). On a local FS
+        # both managers exists-check then rename(2) — FileContext's
+        # rename(NONE) falls through to the same FileSystem.rename — so
+        # HDFSMetadataLog's no-overwrite contract is unchanged, and the
+        # checkpoint file set (offsets, commits, state, .crc files) is
+        # identical. Spark's ChecksumCheckpointFileManager still wraps
+        # the configured manager for state-store files.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
     )
     return builder.getOrCreate()

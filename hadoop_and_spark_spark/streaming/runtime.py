@@ -3,17 +3,27 @@ volume.
 
 Every stateful streaming operator (windowed aggregation, streaming
 dedup, stream-stream join, session windows) commits one state-store
-delta file per shuffle partition per micro-batch — for a stream-stream
-join, four stores per partition. The weekly-replay harness delivers a
-few thousand rows per micro-batch, so running its stateful plans at
-the session-wide ``spark.sql.shuffle.partitions`` (sized for batch
-analytics over the corpus) pays 32x state-commit and checkpoint-fsync
-overhead for no parallelism gain: measured on the stream-stream
-interval join replay, cold wall time drops 49.7 s -> 13.7 s when state
-partitions go 32 -> 4, with byte-identical sink contents.
+delta file, plus its checksum files, per shuffle partition per
+micro-batch — for a stream-stream join, four stores per partition. The
+weekly-replay harness delivers one week of events per micro-batch (at
+most about 5 k rows at 0.2x sf0.1 and 23 k at sf0.1), which one task
+aggregates in milliseconds, so every state partition past the first
+adds commits and checkpoint files, not parallelism:
+
+- 32 -> 4 partitions: cold wall time of the stream-stream interval
+  join replay went 49.7 s -> 13.7 s, byte-identical sink contents.
+- 4 -> 1 partition (4 cores, 15 GiB, PySpark 4.1.2, JFR
+  ``jdk.ProcessStart``): one cold ``event_count_hourly_stream`` run
+  over 6 micro-batches writes 64 checkpoint files instead of 136 (only
+  ``state/0/1..3`` are gone) and forks 73 child processes instead of
+  148. The forks are Hadoop ``Shell`` ``chmod`` calls: without
+  Hadoop's native library the local filesystem forks one to set the
+  permissions of each file and directory it creates. The other fork source, ``readlink`` on
+  every checkpoint rename, is removed by the checkpoint manager that
+  ``session.get_spark`` configures (692 forks before both changes).
 
 ``start_and_await`` therefore pins ``spark.sql.shuffle.partitions`` to
-a replay-appropriate value (default 4, override with
+a replay-appropriate value (default 1, override with
 ``$SPARK_GRAFT_STREAM_SHUFFLE``) around the stream start and restores
 the session value afterwards. This is safe, not a semantics knob:
 
@@ -53,7 +63,7 @@ _PIN_PREV: str | None = None
 
 
 def replay_shuffle_partitions() -> str:
-    return os.environ.get(REPLAY_SHUFFLE_ENV, "4")
+    return os.environ.get(REPLAY_SHUFFLE_ENV, "1")
 
 
 def start_and_await(spark, writer) -> None:

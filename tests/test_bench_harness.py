@@ -134,3 +134,32 @@ class TestTimedRun:
         with pytest.raises(ConnectionRefusedError):
             bench.timed_run(state, run)
         assert len(log) == 1 and state["rebuilds"] == 1
+
+
+def test_revive_clears_singletons_pyspark_still_has():
+    """Version guard for ``bench._revive``: it resets PySpark private
+    class attributes by name, and assigning to an attribute PySpark
+    renamed would silently create a new one while the real singleton
+    keeps pointing at the dead JVM. Every ``Class._attr`` that
+    ``_revive`` touches must still be defined on that class itself."""
+    import inspect
+    import re
+
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+    from pyspark.sql.context import SQLContext
+
+    owners = {c.__name__: c for c in (SparkContext, SparkSession, SQLContext)}
+    source = inspect.getsource(bench._revive)
+    touched = set(re.findall(r"\b(SparkContext|SparkSession|SQLContext)\.(_\w+)", source))
+    assert touched >= {
+        ("SparkContext", "_gateway"),
+        ("SparkContext", "_jvm"),
+        ("SparkContext", "_lock"),
+        ("SparkContext", "_active_spark_context"),
+        ("SparkSession", "_instantiatedSession"),
+        ("SparkSession", "_activeSession"),
+        ("SQLContext", "_instantiatedContext"),
+    }
+    missing = sorted(f"{c}.{a}" for c, a in touched if a not in vars(owners[c]))
+    assert not missing, f"PySpark no longer defines {missing}; update bench._revive"

@@ -867,6 +867,50 @@ def test_stream_restart_recovers_state_from_checkpoint(spark, tmp_path):
     )
 
 
+def test_checkpoint_file_manager_is_filesystem_based(spark, tmp_path):
+    """Drift guard for session.CHECKPOINT_FILE_MANAGER. The conf key is
+    internal and Spark accepts unknown keys silently, so a moved or
+    renamed class would quietly bring back the FileContext manager's
+    shell forks. The class must load in the running JVM, Spark must
+    build it (or a checksum wrapper around it) for a local checkpoint
+    path, and it must keep the no-overwrite contract HDFSMetadataLog
+    relies on: an atomic create over an existing file raises."""
+    from py4j.protocol import Py4JJavaError
+
+    from hadoop_and_spark_spark.session import CHECKPOINT_FILE_MANAGER
+
+    jvm = spark._jvm
+    cls = jvm.java.lang.Class.forName(CHECKPOINT_FILE_MANAGER)
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == CHECKPOINT_FILE_MANAGER
+    )
+
+    root = jvm.org.apache.hadoop.fs.Path(str(tmp_path))
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = checkpointing.CheckpointFileManager.create(root, hadoop_conf)
+    if mgr.getClass().getSimpleName() == "ChecksumCheckpointFileManager":
+        field = mgr.getClass().getDeclaredField("underlyingFileMgr")
+        field.setAccessible(True)
+        mgr = field.get(mgr)
+    assert cls.isInstance(mgr), mgr.getClass().getName()
+
+    target = jvm.org.apache.hadoop.fs.Path(root, "0")
+    out = mgr.createAtomic(target, False)
+    out.write(1)
+    out.close()
+    out = mgr.createAtomic(target, False)
+    out.write(2)
+    with pytest.raises(Py4JJavaError) as exc:
+        out.close()
+    already_exists = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    )
+    assert already_exists.isInstance(exc.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == bytes([1])
+
+
 def test_replay_files_match_ntile_reference(spark, sf_dir, tmp_path):
     """The range-partitioned single-pass writer must reproduce exactly
     the buckets the retired global-window ntile produced: equal-count
