@@ -238,7 +238,7 @@ def session_memo(spark: SparkSession, sf_dir: str, table: str, version: str, bui
     memo and build_once (per-key locks, so distinct artifacts still
     build in parallel), the replay shuffle-partition pin
     (streaming/runtime.py, refcounted), the memory-sink sequence
-    (trending._SEQ_LOCK) and scoped SQL-conf mutation
+    (runtime._SEQ_LOCK) and scoped SQL-conf mutation
     (catalog._CONF_LOCK). A new in-session artifact cache MUST be a
     session_memo call; any other new module-level mutable cache MUST
     take a per-key lock like this one."""

@@ -50,15 +50,12 @@ def _run_cdc_upsert(spark, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..sources.maintenance import build_once, merge_upsert, source_marker
-    from .trending import weekly_replay_path, write_weekly_replay
+    from ..sources.maintenance import merge_upsert
+    from ..sources.mock_stream import read_replay_stream
+    from .runtime import REPLAY_FILES
+    from .trending import WEEKLY
 
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
+    src = WEEKLY.build(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="hs_cdc_")
     table = os.path.join(work, "table")
     # versioned changelog row: (ts, event_id) is a unique per-key total
@@ -77,11 +74,7 @@ def _run_cdc_upsert(spark, sf_dir: str) -> DataFrame:
         shutil.rmtree(table)
         os.replace(staged, table)
 
-    stream = (
-        spark.readStream.schema(_CDC_COLS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
+    stream = read_replay_stream(spark, os.path.join(src, REPLAY_FILES), _CDC_COLS)
     writer = (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", os.path.join(work, "ckpt"))

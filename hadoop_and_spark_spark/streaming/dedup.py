@@ -23,10 +23,14 @@ content hash instead of region.
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .runtime import start_and_await
+from ..catalog import load_table
+from ..sources.mock_stream import write_scripted_batches
+from .runtime import ReplaySource, replay
 
 
 def streaming_dedup_exact(
@@ -61,46 +65,25 @@ DOC_REPLAY_BUCKETS = 5
 REARRIVAL_IDS_LT = DOC_REPLAY_BUCKETS * 10
 
 
-def doc_replay_path(sf_dir: str) -> str:
-    """On-disk location of the document replay source for a corpus."""
-    from ..sources.maintenance import corpus_tmp_path
-
-    return corpus_tmp_path("hs_docdedup_", sf_dir)
-
-
 def write_doc_replay(spark, sf_dir: str, out_path: str) -> None:
     """Split documents into DOC_REPLAY_BUCKETS delivery files
     (doc_id % buckets), mtime-ordered for one-file-per-micro-batch
     replay; files 1..N-1 additionally RE-DELIVER bucket 0's lowest
     doc_ids so every later batch contains exact re-arrivals the
     dedup state must drop."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
-
-    from ..catalog import load_table
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     rearrivals = docs.where(
         (F.col("doc_id") % DOC_REPLAY_BUCKETS == 0)
         & (F.col("doc_id") < REARRIVAL_IDS_LT)
     )
-    os.makedirs(out_path, exist_ok=True)
-    base = time.time()
+    batches = []
     for k in range(DOC_REPLAY_BUCKETS):
         part = docs.where(F.col("doc_id") % DOC_REPLAY_BUCKETS == k)
-        if k > 0:
-            part = part.unionByName(rearrivals)
-        stage = os.path.join(out_path, "_stage")
-        part.coalesce(1).write.mode("overwrite").parquet(stage)
-        (pf,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dest = os.path.join(out_path, f"b{k:03d}.parquet")
-        os.replace(pf, dest)
-        shutil.rmtree(stage)
-        os.utime(dest, (base + k, base + k))
+        batches.append(part.unionByName(rearrivals) if k > 0 else part)
+    write_scripted_batches(batches, out_path)
+
+
+DOC_REPLAY = ReplaySource("documents", "hs_docdedup_", "docdedup_v2", write_doc_replay)
 
 
 def dedup_exact_stream(spark, sf_dir: str) -> DataFrame:
@@ -123,43 +106,12 @@ def dedup_exact_stream(spark, sf_dir: str) -> DataFrame:
     (streaming_dedup_exact's watermark form, unit-tested). Runs once
     per (session, corpus) via the session memo like every registered
     stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "documents", "docdedup_run_v1",
-        lambda: _run_dedup_stream(spark, sf_dir),
+    return replay(
+        spark, sf_dir, "dedup_exact_stream", DOC_REPLAY, "doc_id long, text string",
+        lambda s: streaming_dedup_exact(s).select("text_md5"),
+        mode="append",
+        read=lambda sink: sink.sortWithinPartitions("text_md5"),
     )
-
-
-def _run_dedup_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-
-    src = doc_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "documents", "docdedup_v1"),
-        lambda: write_doc_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*.parquet")
-    )
-    out = streaming_dedup_exact(stream).select("text_md5")
-    from .trending import register_sink
-
-    qname = register_sink("dedup_stream", sf_dir)
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_dedup_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).sortWithinPartitions("text_md5")
 
 
 # ------------------------------- bounded-state (watermarked) variant
@@ -182,12 +134,6 @@ REDELIVER_WITHIN_IDX = 1
 REDELIVER_BEYOND_IDX = 4
 
 
-def timed_doc_replay_path(sf_dir: str) -> str:
-    from ..sources.maintenance import corpus_tmp_path
-
-    return corpus_tmp_path("hs_docdedupwm_", sf_dir)
-
-
 def write_doc_timed_replay(spark, sf_dir: str, out_path: str) -> None:
     """The doc replay with EVENT TIME: bucket k delivered at
     T0 + k hours; the rearrival set re-delivered per the schedule
@@ -203,16 +149,6 @@ def write_doc_timed_replay(spark, sf_dir: str, out_path: str) -> None:
     boundary, making the emission count depend on strict-vs-inclusive
     eviction. min() keeps the selection deterministic and DuckDB-
     mirrorable."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
-
-    from ..catalog import load_table
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .groupBy("text")
@@ -224,22 +160,20 @@ def write_doc_timed_replay(spark, sf_dir: str, out_path: str) -> None:
         & (F.col("doc_id") < REARRIVAL_IDS_LT)
     )
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    os.makedirs(out_path, exist_ok=True)
-    base = time.time()
+    batches = []
     for k in range(DOC_REPLAY_BUCKETS):
         part = docs.where(F.col("doc_id") % DOC_REPLAY_BUCKETS == k)
         if k in (REDELIVER_WITHIN_IDX, REDELIVER_BEYOND_IDX):
             part = part.unionByName(rearrivals)
-        part = part.withColumn(
-            "ts", F.lit(t0 + dt.timedelta(hours=k)).cast("timestamp")
+        batches.append(
+            part.withColumn("ts", F.lit(t0 + dt.timedelta(hours=k)).cast("timestamp"))
         )
-        stage = os.path.join(out_path, "_stage")
-        part.coalesce(1).write.mode("overwrite").parquet(stage)
-        (pf,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dest = os.path.join(out_path, f"b{k:03d}.parquet")
-        os.replace(pf, dest)
-        shutil.rmtree(stage)
-        os.utime(dest, (base + k, base + k))
+    write_scripted_batches(batches, out_path)
+
+
+TIMED_DOC_REPLAY = ReplaySource(
+    "documents", "hs_docdedupwm_", "docdedupwm_v3", write_doc_timed_replay
+)
 
 
 def dedup_bounded_stream(spark, sf_dir: str) -> DataFrame:
@@ -258,46 +192,15 @@ def dedup_bounded_stream(spark, sf_dir: str) -> DataFrame:
     Scale: state = distinct keys inside the watermark horizon, not
     stream history; only (md5, ts) is stored. Runs once per (session,
     corpus) via the session memo like every registered stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "documents", "docdedupwm_run_v2",
-        lambda: _run_bounded_stream(spark, sf_dir),
+    return replay(
+        spark, sf_dir, "dedup_bounded_stream", TIMED_DOC_REPLAY,
+        "doc_id long, text string, ts timestamp",
+        lambda s: streaming_dedup_exact(
+            s, watermark=("ts", DEDUP_WM_DELAY)
+        ).select("text_md5"),
+        mode="append",
+        read=lambda sink: sink.sortWithinPartitions("text_md5"),
     )
-
-
-def _run_bounded_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .trending import register_sink
-
-    src = timed_doc_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "documents", "docdedupwm_v2"),
-        lambda: write_doc_timed_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*.parquet")
-    )
-    out = streaming_dedup_exact(
-        stream, watermark=("ts", DEDUP_WM_DELAY)
-    ).select("text_md5")
-    qname = register_sink("dedupwm_stream", sf_dir)
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="hs_dedupwm_ck_")
-        )
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).sortWithinPartitions("text_md5")
 
 
 QUERIES = {

@@ -142,8 +142,8 @@ def purchase_click_pairs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # all — each runs REAL incremental execution under the hash gate with
 # a full DuckDB oracle, not just the batch-duality unit test.
 
-from .runtime import start_and_await  # noqa: E402
-from .trending import register_sink  # noqa: E402 — after module docs
+from .runtime import replay  # noqa: E402 — after module docs
+from .trending import WEEKLY  # noqa: E402
 
 
 def tier_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,43 +157,13 @@ def tier_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the J2 broadcast dim join; aggregation state is bounded by
     tiers x watermark-horizon windows. Runs once per (session,
     corpus) via the session memo like every registered stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "tierstream_run_v1",
-        lambda: _run_tier_stream(spark, sf_dir),
+    return replay(
+        spark, sf_dir, "tier_counts_stream", WEEKLY, "ts timestamp, user_id bigint",
+        lambda s: enriched_tier_counts(
+            s.withWatermark("ts", "1 hour"), user_profiles(spark, sf_dir)
+        ),
+        read=lambda sink: sink.orderBy("tier", "window_start"),
     )
-
-
-def _run_tier_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .trending import weekly_replay_path, write_weekly_replay
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-        .withWatermark("ts", "1 hour")
-    )
-    agg = enriched_tier_counts(stream, user_profiles(spark, sf_dir))
-    qname = register_sink("tier_stream", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_tier_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("tier", "window_start")
 
 
 def purchase_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,40 +180,13 @@ def purchase_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (purchase, click) pair exactly once and the DuckDB interval-join
     oracle gates the state store's buffering AND eviction. Output is
     event-proportional: within-partition order only."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "pairstream_run_v1",
-        lambda: _run_pair_stream(spark, sf_dir),
+    return replay(
+        spark, sf_dir, "purchase_click_pairs", WEEKLY,
+        "event_id bigint, event_type string, ts timestamp, user_id bigint",
+        purchase_click_pairs_stream,
+        mode="append",
+        read=lambda sink: sink.sortWithinPartitions("purchase_id", "click_id"),
     )
-
-
-def _run_pair_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .trending import weekly_replay_path, write_weekly_replay
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = spark.readStream.schema(
-        "event_id bigint, event_type string, ts timestamp, user_id bigint"
-    ).option("maxFilesPerTrigger", 1).parquet(src + "/wk*.parquet")
-    pairs = purchase_click_pairs_stream(stream)
-    qname = register_sink("pair_stream", sf_dir)
-    writer = (
-        pairs.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_pair_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).sortWithinPartitions("purchase_id", "click_id")
 
 
 QUERIES = {

@@ -1,5 +1,30 @@
-"""Replay-stream runtime: state partitioning sized to the micro-batch
+"""Replay-stream runtime: the one runner every registered memory-sink
+stream starts through, and state partitioning sized to the micro-batch
 volume.
+
+``replay(spark, sf_dir, name, source, schema, plan, mode, read)`` is
+the single start point of a registered replay query (the a7 harness:
+sorted part files fed one per micro-batch, a7/EventCount.scala:62-83,
+108-118). In order, it:
+
+1. memoizes the run per (session, corpus) under ``<name>_replay`` — a
+   production stream executes continuously, so re-invoking the query
+   reads its sink instead of restarting the stream;
+2. builds the ``ReplaySource`` directory once per corpus
+   (``build_once`` under the source's marker version);
+3. reads it through ``mock_stream.read_replay_stream`` (one file per
+   trigger) and applies the query's own ``plan``;
+4. writes a memory sink named after the query and corpus
+   (``register_sink``) with a fresh ``hs_<name>_ck_`` checkpoint under
+   ``Trigger.AvailableNow``;
+5. starts it through ``start_and_await`` and returns
+   ``read(spark.table(sink))``.
+
+The query name is its only identifier: memo version, sink tag and
+checkpoint prefix all derive from it, so two registered streams can
+never share a sink. The runner adds no action of its own. The one
+stream that is not a memory sink (``cdc.py``'s ``foreachBatch`` merge)
+builds the same ``ReplaySource`` and starts through ``start_and_await``.
 
 Every stateful streaming operator (windowed aggregation, streaming
 dedup, stream-stream join, session windows) commits one state-store
@@ -46,15 +71,31 @@ session default. The env override models that decision.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import threading
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame
+
+from ..sources.maintenance import (
+    build_once,
+    corpus_digest,
+    corpus_tmp_path,
+    session_memo,
+    source_marker,
+)
+from ..sources.mock_stream import read_replay_stream
 
 REPLAY_SHUFFLE_ENV = "SPARK_GRAFT_STREAM_SHUFFLE"
 _KEY = "spark.sql.shuffle.partitions"
 
-# Refcounted pin: replay streams may now run on CONCURRENT sweep
-# threads (the per-module sweep groups), and a naive save/set/restore
-# pair interleaved across two streams can capture the OTHER stream's
-# pinned value as "prev" and leave the session pinned forever. The
+# Refcounted pin: replay streams run on the concurrent threads of
+# registry sweeps (tests' run_queries_concurrently), and a naive
+# save/set/restore pair interleaved across two streams can capture the
+# OTHER stream's pinned value as "prev" and leave the session pinned
+# forever. The
 # first stream in saves the session value and sets the pin; the last
 # one out restores it; everyone in between just counts.
 _PIN_LOCK = threading.Lock()
@@ -88,3 +129,106 @@ def start_and_await(spark, writer) -> None:
             _PIN_DEPTH -= 1
             if _PIN_DEPTH == 0:
                 spark.conf.set(_KEY, _PIN_PREV)
+
+
+_STREAM_SEQ = [0]  # unique memory-sink names across repeat invocations
+_SEQ_LOCK = threading.Lock()  # guards seq + _SINKS registration
+
+# Newest memory-sink name per (query name, corpus): replay streams run
+# once per (session, corpus), but the TOTALITY sweeps run every
+# registered query against OTHER corpora (e.g. an empty dir), each
+# starting its own stream with a fresh seq. A test that wants "the raw
+# sink for MY corpus" must therefore resolve by (name, corpus), not by
+# newest seq — scanning seqs downward finds whichever corpus ran last.
+# Latest registration wins per key, which is exactly the session_memo
+# invariant (one live replay per session+corpus).
+_SINKS: dict[tuple[str, str], str] = {}
+
+
+def register_sink(name: str, sf_dir: str) -> str:
+    """Allocate a unique memory-sink name for query ``name`` replayed
+    over ``sf_dir`` and record it as the newest sink for (name,
+    corpus). The sink name embeds the corpus digest so sinks from
+    different corpora can never shadow each other. Locked: replay
+    queries may run on concurrent sweep threads, and a duplicated seq
+    would alias two streams onto one memory-sink table."""
+    digest = corpus_digest(sf_dir, width=8)
+    with _SEQ_LOCK:
+        _STREAM_SEQ[0] += 1
+        qname = f"{name}_{digest}_{_STREAM_SEQ[0]}"
+        _SINKS[(name, digest)] = qname
+    return qname
+
+
+def sink_table(spark, sf_dir: str, name: str) -> DataFrame:
+    """The raw (pre-``read``) memory sink of the newest run of the
+    registered stream ``name`` over ``sf_dir`` in this session. Raises
+    KeyError if no such stream has run — callers invoke the query
+    first."""
+    return spark.table(_SINKS[(name, corpus_digest(sf_dir, width=8))])
+
+
+@dataclass(frozen=True)
+class ReplaySource:
+    """One kind of replay source: a directory of one-batch parquet
+    files derived from ``table``, written by ``write(spark, sf_dir,
+    out_path)`` once per corpus under the ``prefix``-named tmp dir.
+    ``version`` is the build marker's format version — bump it whenever
+    the writer's output changes, so an old directory is rebuilt."""
+
+    table: str
+    prefix: str
+    version: str
+    write: Callable[..., None]
+
+    def build(self, spark, sf_dir: str) -> str:
+        """The built replay directory for ``sf_dir``. A rebuild starts
+        from an empty directory, so no file of an older build (another
+        week count, another naming scheme) is ever replayed."""
+        out = corpus_tmp_path(self.prefix, sf_dir)
+
+        def rebuild() -> None:
+            shutil.rmtree(out, ignore_errors=True)
+            self.write(spark, sf_dir, out)
+
+        build_once(out, source_marker(sf_dir, self.table, self.version), rebuild)
+        return out
+
+
+# Every replay writer names its per-batch files *.parquet in delivery
+# order; the build marker and staging dirs start with "_".
+REPLAY_FILES = "*.parquet"
+
+
+def replay(
+    spark,
+    sf_dir: str,
+    name: str,
+    source: ReplaySource,
+    schema: str,
+    plan: Callable[[DataFrame], DataFrame],
+    mode: str = "update",
+    read: Callable[[DataFrame], DataFrame] = lambda df: df,
+) -> DataFrame:
+    """Run the registered replay stream ``name`` over ``sf_dir``: the
+    ``source`` files read with ``schema`` one per micro-batch, through
+    ``plan``, into a memory sink in output ``mode`` drained by
+    availableNow;
+    returns ``read`` of the sink. Memoized per (session, corpus) — see
+    the module docstring for the five steps."""
+
+    def run() -> DataFrame:
+        src = source.build(spark, sf_dir)
+        out = plan(read_replay_stream(spark, os.path.join(src, REPLAY_FILES), schema))
+        qname = register_sink(name, sf_dir)
+        writer = (
+            out.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode(mode)
+            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"hs_{name}_ck_"))
+            .trigger(availableNow=True)
+        )
+        start_and_await(spark, writer)
+        return read(spark.table(qname))
+
+    return session_memo(spark, sf_dir, source.table, f"{name}_replay", run)

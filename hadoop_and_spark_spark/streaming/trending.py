@@ -18,20 +18,21 @@ The module also hosts the WEEKLY REPLAY harness — the events table
 split into one parquet file per calendar week, mtime/name-ordered so
 a maxFilesPerTrigger=1 file source replays the weeks as deterministic
 micro-batches (the Structured-Streaming stand-in for the reference's
-manual-clock DStream batches) — and the three registered queries that
-run REAL streaming execution under the driver's hash gate on top of
-it: trending_arrivals_stream (T5, applyInPandasWithState),
-event_count_hourly_stream (T2) and region_event_count_stream (T3,
-both watermarked windowed aggregations whose update-mode sinks equal
-their batch twins because windows never straddle week boundaries).
-Each runs once per (session, corpus) via the session memo — a
-production stream executes continuously; re-invoking reads its sink.
+manual-clock DStream batches), as three ``ReplaySource`` variants
+(in order, late-delivered, sessionization with flush sentinels) — and
+the seven registered events streams that run REAL streaming execution
+under the driver's hash gate on top of it, each one
+``runtime.replay`` call: the trend replay (T5), the hourly, late,
+late-tolerated, keyed-region and hopping windowed counts (T2/T3) and
+the session windows. Their oracles sit in ``ORACLE_SQL`` below, most
+shared with a batch twin because the replay's week batches make the
+streamed sink equal the batch result.
 """
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Iterator
+from functools import partial
 from typing import Any
 
 import pandas as pd
@@ -39,8 +40,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .runtime import start_and_await
-from .windows import TREND_FACTOR, TREND_MIN
+from ..operators.temporal import ORACLE_SQL as _TEMPORAL_ORACLE
+from ..operators.temporal import streaming_user_sessions
+from . import windows as W
+from .runtime import ReplaySource, replay
+from .windows import (
+    _WINDOW_FMT,
+    SLIDE_HOP,
+    SLIDE_LEN,
+    TREND_FACTOR,
+    TREND_MIN,
+    _classify,
+)
 
 OUTPUT_SCHEMA = (
     "key string, cnt long, prev long, trending boolean"
@@ -98,57 +109,6 @@ def _trend_fn_week(
             "trending": [trending],
         }
     )
-
-
-_STREAM_SEQ = [0]  # unique memory-sink names across repeat invocations
-_SEQ_LOCK = threading.Lock()  # guards seq + _SINKS registration
-
-# Newest memory-sink name per (tag, corpus): replay streams run once
-# per (session, corpus), but the TOTALITY sweeps run every registered
-# query against OTHER corpora (e.g. an empty dir), each starting its
-# own stream with a fresh seq. A test that wants "the raw sink for MY
-# corpus" must therefore resolve by (tag, corpus), not by newest seq —
-# scanning seqs downward finds whichever corpus ran last (the round-6
-# full-suite ordering failure). Latest registration wins per key,
-# which is exactly the session_memo invariant (one live replay per
-# session+corpus).
-_SINKS: dict[tuple[str, str], str] = {}
-
-
-def _corpus_digest(sf_dir: str) -> str:
-    from ..sources.maintenance import corpus_digest
-
-    return corpus_digest(sf_dir, width=8)
-
-
-def register_sink(tag: str, sf_dir: str) -> str:
-    """Allocate a unique memory-sink name for a replay stream over
-    ``sf_dir`` and record it as the newest sink for (tag, corpus).
-    The name embeds the corpus digest so sinks from different corpora
-    can never shadow each other. Locked: replay queries may run on
-    concurrent sweep threads, and a duplicated seq would alias two
-    streams onto one memory-sink table."""
-    with _SEQ_LOCK:
-        _STREAM_SEQ[0] += 1
-        qname = f"{tag}_{_corpus_digest(sf_dir)}_{_STREAM_SEQ[0]}"
-        _SINKS[(tag, _corpus_digest(sf_dir))] = qname
-    return qname
-
-
-def sink_table(spark, sf_dir: str, tag: str) -> DataFrame:
-    """The raw (pre-consolidation) memory sink of the newest ``tag``
-    stream run over ``sf_dir`` in this session. Raises KeyError if no
-    such stream has run — callers invoke the query first."""
-    return spark.table(_SINKS[(tag, _corpus_digest(sf_dir))])
-
-
-def weekly_replay_path(sf_dir: str, tag: str = "") -> str:
-    """Canonical on-disk location of the week-per-file replay source
-    for a corpus. ``tag`` separates delivery-order variants (e.g. the
-    late-data replay)."""
-    from ..sources.maintenance import corpus_tmp_path
-
-    return corpus_tmp_path(f"hs_trendwk_{tag}", sf_dir)
 
 
 # Delivery-order script for the late-data replay: the SECOND
@@ -279,6 +239,36 @@ def write_weekly_replay(
             os.utime(dest, (base + seq, base + seq))
 
 
+# The three weekly replay variants. Every registered events stream
+# reads one of them; each marker version is written here only.
+WEEKLY = ReplaySource("events", "hs_trendwk_", "trendwk_v3", write_weekly_replay)
+WEEKLY_LATE = ReplaySource(
+    "events", "hs_trendwk_late_", "trendwk_late_v2",
+    partial(write_weekly_replay, displace_idx=LATE_WEEK_IDX),
+)
+WEEKLY_SESS = ReplaySource(
+    "events", "hs_trendwk_sess_", "sesswk_v2",
+    partial(write_weekly_replay, include_value=True, flush_days=30),
+)
+
+
+def _window_counts(
+    stream: DataFrame, delay: str = "1 hour", length: str = "1 hour",
+    hop: str | None = None,
+) -> DataFrame:
+    """Watermarked event-time window counts of a replay stream, labelled
+    like the batch twins (window_start, cnt)."""
+    return (
+        stream.withWatermark("ts", delay)
+        .groupBy(F.window("ts", length, hop).alias("w"))
+        .agg(F.count("*").alias("cnt"))
+        .select(
+            F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
+            "cnt",
+        )
+    )
+
+
 def trending_arrivals_stream(spark, sf_dir: str) -> DataFrame:
     """T5 through the REAL stateful path, driver-checkable: replay the
     events table week-by-week through ``applyInPandasWithState`` (one
@@ -289,7 +279,7 @@ def trending_arrivals_stream(spark, sf_dir: str) -> DataFrame:
     Because a key emits exactly one row per batch it appears in, the
     trajectory is SQL-expressible: per-(type, week) counts with
     lag(cnt) over weeks — so unlike most stateful streaming this query
-    has a full DuckDB oracle (registered in streaming/windows.py), and
+    has a full DuckDB oracle (``ORACLE_SQL`` below), and
     the driver's hash gate covers the state-store path itself, not a
     batch twin.
 
@@ -301,11 +291,19 @@ def trending_arrivals_stream(spark, sf_dir: str) -> DataFrame:
     its sink, it does not restart the stream — so repeat invocations
     are served from the session memo (cold replay cost stays in the
     bench warm-up and tools/scaling_probe.py)."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "trendwk_run_v1",
-        lambda: _run_weekly_replay(spark, sf_dir),
+    return replay(
+        spark, sf_dir, "trending_arrivals_stream", WEEKLY,
+        "event_type string, wk string",
+        lambda s: s.select(F.col("event_type").alias("key"), "wk")
+        .groupBy("key")
+        .applyInPandasWithState(
+            _trend_fn_week,
+            outputStructType=WEEK_OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        read=lambda sink: sink.orderBy("key", "week"),
     )
 
 
@@ -325,50 +323,10 @@ def event_count_hourly_stream(spark, sf_dir: str) -> DataFrame:
     stream history). Runs once per (session, corpus) like the trend
     replay — a production stream executes continuously; re-invoking
     reads its sink."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "hourlystream_run_v1",
-        lambda: _run_hourly_stream(spark, sf_dir),
+    return replay(
+        spark, sf_dir, "event_count_hourly_stream", WEEKLY, "ts timestamp",
+        _window_counts, read=lambda sink: sink.orderBy("window_start"),
     )
-
-
-def _run_hourly_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .windows import _WINDOW_FMT
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
-            "cnt",
-        )
-    )
-    qname = register_sink("hourly_stream", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_hourly_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("window_start")
 
 
 def event_count_hourly_late(spark, sf_dir: str) -> DataFrame:
@@ -388,11 +346,9 @@ def event_count_hourly_late(spark, sf_dir: str) -> DataFrame:
     state, update-mode sink; the only difference is the scripted
     delivery order. Runs once per (session, corpus) via the session
     memo, like every registered stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "hourlylate_run_v1",
-        lambda: _run_hourly_late(spark, sf_dir),
+    return replay(
+        spark, sf_dir, "event_count_hourly_late", WEEKLY_LATE, "ts timestamp",
+        _window_counts, read=lambda sink: sink.orderBy("window_start"),
     )
 
 
@@ -409,52 +365,11 @@ def event_count_hourly_late_tolerated(spark, sf_dir: str) -> DataFrame:
     Scale note: tolerating 60-day lateness means 60 days of window
     state; the production trade the pair of queries demonstrates is
     exactly state size vs completeness."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "hourlylatetol_run_v1",
-        lambda: _run_hourly_late(spark, sf_dir, delay="60 days"),
+    return replay(
+        spark, sf_dir, "event_count_hourly_late_tolerated", WEEKLY_LATE,
+        "ts timestamp", lambda s: _window_counts(s, delay="60 days"),
+        read=lambda sink: sink.orderBy("window_start"),
     )
-
-
-def _run_hourly_late(spark, sf_dir: str, delay: str = "1 hour") -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .windows import _WINDOW_FMT
-
-    src = weekly_replay_path(sf_dir, tag="late_")
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_late_v2"),
-        lambda: write_weekly_replay(
-            spark, sf_dir, src, displace_idx=LATE_WEEK_IDX
-        ),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    agg = (
-        stream.withWatermark("ts", delay)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
-            "cnt",
-        )
-    )
-    qname = register_sink("hourly_late", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_late_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("window_start")
 
 
 def region_event_count_stream(spark, sf_dir: str) -> DataFrame:
@@ -468,33 +383,10 @@ def region_event_count_stream(spark, sf_dir: str) -> DataFrame:
     week-batch boundaries, so each (region, window) updates exactly
     once and the update-mode sink equals the batch query — whose
     oracle it shares."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "regionstream_run_v1",
-        lambda: _run_region_stream(spark, sf_dir),
-    )
-
-
-def _run_region_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .windows import _WINDOW_FMT, _classify
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
+    return replay(
+        spark, sf_dir, "region_event_count_stream", WEEKLY,
+        "event_type string, ts timestamp",
+        lambda s: s.withWatermark("ts", "1 hour")
         .select(_classify(F.col("event_type")).alias("region"), "ts")
         .groupBy("region", F.window("ts", "10 minutes").alias("w"))
         .agg(F.count("*").alias("cnt"))
@@ -502,18 +394,9 @@ def _run_region_stream(spark, sf_dir: str) -> DataFrame:
             "region",
             F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
             "cnt",
-        )
+        ),
+        read=lambda sink: sink.orderBy("region", "window_start"),
     )
-    qname = register_sink("region_stream", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_region_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("region", "window_start")
 
 
 def event_count_sliding_stream(spark, sf_dir: str) -> DataFrame:
@@ -535,56 +418,12 @@ def event_count_sliding_stream(spark, sf_dir: str) -> DataFrame:
     the straddling windows are exactly the ones whose state must
     outlive a batch boundary to be evicted only after their second
     update."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "slidingstream_run_v1",
-        lambda: _run_sliding_stream(spark, sf_dir),
-    )
-
-
-def _run_sliding_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .windows import _WINDOW_FMT, SLIDE_HOP, SLIDE_LEN
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", SLIDE_LEN, SLIDE_HOP).alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
-            "cnt",
-        )
-    )
-    qname = register_sink("sliding_stream", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="hs_sliding_ck_")
-        )
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return (
-        spark.table(qname)
-        .groupBy("window_start")
+    return replay(
+        spark, sf_dir, "event_count_sliding_stream", WEEKLY, "ts timestamp",
+        lambda s: _window_counts(s, length=SLIDE_LEN, hop=SLIDE_HOP),
+        read=lambda sink: sink.groupBy("window_start")
         .agg(F.max("cnt").alias("cnt"))
-        .orderBy("window_start")
+        .orderBy("window_start"),
     )
 
 
@@ -616,96 +455,23 @@ def user_sessions_stream(spark, sf_dir: str) -> DataFrame:
     horizon (one row each), evicted at close; the memory sink holds
     the emitted sessions (keyed cardinality). Runs once per (session,
     corpus) like every registered stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "sessstream_run_v1",
-        lambda: _run_sessions_stream(spark, sf_dir),
-    )
-
-
-def _run_sessions_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..operators.temporal import streaming_user_sessions
-    from ..sources.maintenance import build_once, source_marker
-
-    src = weekly_replay_path(sf_dir, tag="sess_")
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "sesswk_v2"),
-        lambda: write_weekly_replay(
-            spark, sf_dir, src, include_value=True, flush_days=30
-        ),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id bigint, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
     # NO user_id >= 0 filter on the STREAM side: Catalyst pushes such
     # a filter through the aggregate to the scan (user_id is a
     # grouping key), which drops the sentinel rows BEFORE they can
     # advance the watermark — un-flushing the exact tail the sentinel
     # exists to flush. The sentinels are filtered on the batch-side
-    # sink read below instead (sentinel 2's watermark closes sentinel
-    # 1's session, so exactly one sentinel row does reach the sink).
-    sess = streaming_user_sessions(stream, watermark="1 hour")
-    qname = register_sink("sessions_stream", sf_dir)
-    writer = (
-        sess.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_sess_ck_"))
-        .trigger(availableNow=True)
+    # sink read instead (sentinel 2's watermark closes sentinel 1's
+    # session, so exactly one sentinel row does reach the sink); the
+    # read sorts within partitions only, since the output is
+    # corpus-proportional (sessions per user), the batch twin's policy.
+    return replay(
+        spark, sf_dir, "user_sessions_stream", WEEKLY_SESS,
+        "ts timestamp, user_id bigint, value double",
+        lambda s: streaming_user_sessions(s, watermark="1 hour"),
+        mode="append",
+        read=lambda sink: sink.where(F.col("user_id") >= 0)
+        .sortWithinPartitions("user_id", "session_start_us"),
     )
-    start_and_await(spark, writer)
-    # within-partition order only: output is corpus-proportional
-    # (sessions per user), same presentation policy as the batch twin
-    return (
-        spark.table(qname)
-        .where(F.col("user_id") >= 0)
-        .sortWithinPartitions("user_id", "session_start_us")
-    )
-
-
-def _run_weekly_replay(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("event_type string, wk string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    out = (
-        stream.select(F.col("event_type").alias("key"), "wk")
-        .groupBy("key")
-        .applyInPandasWithState(
-            _trend_fn_week,
-            outputStructType=WEEK_OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    qname = register_sink("trend_weekly", sf_dir)
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_trend_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("key", "week")
 
 
 def trending_stream(events_stream: DataFrame, key_col: str = "event_type") -> DataFrame:
@@ -726,3 +492,82 @@ def trending_stream(events_stream: DataFrame, key_col: str = "event_type") -> Da
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+QUERIES = {
+    "user_sessions_stream": user_sessions_stream,
+    "trending_arrivals_stream": trending_arrivals_stream,
+    "event_count_hourly_stream": event_count_hourly_stream,
+    "event_count_hourly_late": event_count_hourly_late,
+    "event_count_hourly_late_tolerated": event_count_hourly_late_tolerated,
+    "region_event_count_stream": region_event_count_stream,
+    "event_count_sliding_stream": event_count_sliding_stream,
+}
+
+ORACLE_SQL: dict[str, str] = {
+    # The STATEFUL streaming path (applyInPandasWithState, one week
+    # per micro-batch): a key emits one row per batch it appears in
+    # with prev = its count in the last batch it appeared in — which
+    # is exactly lag(cnt) over the key's PRESENT weeks. Both engines
+    # truncate weeks to ISO Mondays.
+    "trending_arrivals_stream": f"""
+        WITH counts AS (
+            SELECT event_type AS key,
+                   strftime(date_trunc('week', ts::TIMESTAMP),
+                            '%Y-%m-%d') AS week,
+                   count(*) AS cnt
+            FROM events GROUP BY 1, 2
+        ),
+        lagged AS (
+            SELECT key, week, cnt,
+                   coalesce(lag(cnt) OVER (PARTITION BY key ORDER BY week),
+                            0) AS prev
+            FROM counts
+        )
+        SELECT key, week, cnt, prev,
+               (cnt >= {TREND_MIN}
+                AND cnt >= {TREND_FACTOR} * greatest(prev, 1)) AS trending
+        FROM lagged
+        ORDER BY key, week
+    """,
+    # The streaming twins produce exactly the batch query's result
+    # (each tumbling window updates in exactly one week-batch), so they
+    # share its oracle.
+    "event_count_hourly_stream": W.ORACLE_SQL["event_count_hourly"],
+    "region_event_count_stream": W.ORACLE_SQL["region_event_count"],
+    # Late-data replay: the SECOND chronological week arrives after
+    # every other week, far past the 1-hour watermark, so the engine
+    # must DROP its rows — the oracle counts hours EXCLUDING that week.
+    # A green driver row therefore witnesses watermark EVICTION: if the
+    # late rows were aggregated (no eviction), every displaced-week hour
+    # would appear and the hash would flap red. date_trunc('week') is
+    # Monday-start in both engines, so the excluded bucket is identical.
+    "event_count_hourly_late": """
+        WITH wks AS (
+            SELECT DISTINCT date_trunc('week', ts) AS w FROM events
+        ), displaced AS (
+            SELECT w FROM (
+                SELECT w, row_number() OVER (ORDER BY w) AS rn FROM wks
+            ) WHERE rn = 2
+        )
+        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS window_start,
+               count(*) AS cnt
+        FROM events
+        WHERE date_trunc('week', ts) NOT IN (SELECT w FROM displaced)
+        GROUP BY 1 ORDER BY 1
+    """,
+    # The TOLERATED twin runs the SAME out-of-order delivery under a
+    # watermark wide enough to accept the displaced week, so it must
+    # reproduce the full in-order counts — the pair pins that the
+    # watermark horizon (not delivery order) decides late-data fate.
+    "event_count_hourly_late_tolerated": W.ORACLE_SQL["event_count_hourly"],
+    # The hopping twin consolidates its update-mode sink by max(cnt) —
+    # counts are monotone — so it shares the batch hopping oracle.
+    "event_count_sliding_stream": W.ORACLE_SQL["event_count_sliding"],
+    # Session-window state under the gate: append mode emits each
+    # session exactly once at watermark close, and sessions straddling a
+    # weekly micro-batch boundary exist in every corpus, so the final
+    # sink equals the batch sessionization — whose oracle it shares —
+    # only if the state store merged open sessions across batches.
+    "user_sessions_stream": _TEMPORAL_ORACLE["user_sessions"],
+}

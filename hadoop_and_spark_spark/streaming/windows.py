@@ -7,7 +7,8 @@ once over the batch `events` table (DuckDB-checkable, the driver
 gate) and once as a Structured Streaming pipeline
 (`streaming_windowed_counts`) used by the streaming tests; both
 share the same aggregation expression, so the batch oracle checks
-the streaming logic too.
+the streaming logic too. The registered replay-stream twins
+(``*_stream``) and their oracle aliases live in streaming/trending.py.
 
 Mapping (SURVEY §2.9):
 - T2 EventCount: tumbling 1-hour count over everything.
@@ -531,31 +532,6 @@ ORACLE_SQL: dict[str, str] = {
           AND cnt >= {TREND_FACTOR} * greatest(prev, 1)
         ORDER BY event_type, window_start
     """,
-    # The STATEFUL streaming path (applyInPandasWithState, one week
-    # per micro-batch): a key emits one row per batch it appears in
-    # with prev = its count in the last batch it appeared in — which
-    # is exactly lag(cnt) over the key's PRESENT weeks. Both engines
-    # truncate weeks to ISO Mondays.
-    "trending_arrivals_stream": f"""
-        WITH counts AS (
-            SELECT event_type AS key,
-                   strftime(date_trunc('week', ts::TIMESTAMP),
-                            '%Y-%m-%d') AS week,
-                   count(*) AS cnt
-            FROM events GROUP BY 1, 2
-        ),
-        lagged AS (
-            SELECT key, week, cnt,
-                   coalesce(lag(cnt) OVER (PARTITION BY key ORDER BY week),
-                            0) AS prev
-            FROM counts
-        )
-        SELECT key, week, cnt, prev,
-               (cnt >= {TREND_MIN}
-                AND cnt >= {TREND_FACTOR} * greatest(prev, 1)) AS trending
-        FROM lagged
-        ORDER BY key, week
-    """,
 }
 
 # Aggregate result types are pinned to Spark's: DuckDB widens
@@ -637,85 +613,9 @@ ORACLE_SQL["pseudonymize_events"] = f"""
     FROM events ORDER BY event_id
 """
 
-def _trending_arrivals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import trending_arrivals_stream
-
-    return trending_arrivals_stream(spark, sf_dir)
-
-
-def _event_count_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import event_count_hourly_stream
-
-    return event_count_hourly_stream(spark, sf_dir)
-
-
-# The streaming twin produces exactly the batch query's result (each
-# hourly window updates in exactly one week-batch), so it shares its
-# oracle.
-ORACLE_SQL["event_count_hourly_stream"] = ORACLE_SQL["event_count_hourly"]
-ORACLE_SQL["region_event_count_stream"] = ORACLE_SQL["region_event_count"]
-
-
-def _event_count_hourly_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import event_count_hourly_late
-
-    return event_count_hourly_late(spark, sf_dir)
-
-
-def _event_count_hourly_late_tolerated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import event_count_hourly_late_tolerated
-
-    return event_count_hourly_late_tolerated(spark, sf_dir)
-
-
-# Late-data replay: the SECOND chronological week arrives after every
-# other week, far past the 1-hour watermark, so the engine must DROP
-# its rows — the oracle counts hours EXCLUDING that week. A green
-# driver row therefore witnesses watermark EVICTION: if the late rows
-# were aggregated (no eviction), every displaced-week hour would
-# appear and the hash would flap red. date_trunc('week') is
-# Monday-start in both engines, so the excluded bucket is identical.
-# The TOLERATED twin runs the SAME out-of-order delivery under a
-# watermark wide enough to accept the displaced week, so it must
-# reproduce the full in-order counts — the pair pins that the
-# watermark horizon (not delivery order) decides late-data fate.
-ORACLE_SQL["event_count_hourly_late_tolerated"] = ORACLE_SQL[
-    "event_count_hourly"
-]
-
-ORACLE_SQL["event_count_hourly_late"] = """
-    WITH wks AS (
-        SELECT DISTINCT date_trunc('week', ts) AS w FROM events
-    ), displaced AS (
-        SELECT w FROM (
-            SELECT w, row_number() OVER (ORDER BY w) AS rn FROM wks
-        ) WHERE rn = 2
-    )
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS window_start,
-           count(*) AS cnt
-    FROM events
-    WHERE date_trunc('week', ts) NOT IN (SELECT w FROM displaced)
-    GROUP BY 1 ORDER BY 1
-"""
-
-
-def _region_event_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import region_event_count_stream
-
-    return region_event_count_stream(spark, sf_dir)
-
-
-def _event_count_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import event_count_sliding_stream
-
-    return event_count_sliding_stream(spark, sf_dir)
-
-
 # Hopping windows: every event covers the windows starting at
 # trunc_hour(ts) and trunc_hour(ts) − 1 h (len 2 h, hop 1 h, both
-# engines epoch-aligned). The streaming twin consolidates its
-# update-mode sink by max(cnt) — counts are monotone — so it shares
-# the batch oracle.
+# engines epoch-aligned).
 ORACLE_SQL["event_count_sliding"] = """
     WITH starts AS (
         SELECT date_trunc('hour', ts) AS s FROM events
@@ -725,41 +625,13 @@ ORACLE_SQL["event_count_sliding"] = """
     SELECT strftime(s, '%Y-%m-%d %H:%M') AS window_start, count(*) AS cnt
     FROM starts GROUP BY 1 ORDER BY 1
 """
-ORACLE_SQL["event_count_sliding_stream"] = ORACLE_SQL["event_count_sliding"]
-
-
-def _user_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import user_sessions_stream
-
-    return user_sessions_stream(spark, sf_dir)
-
-
-# Session-window state under the gate: append mode emits each session
-# exactly once at watermark close, and sessions straddling a weekly
-# micro-batch boundary exist in every corpus, so the final sink equals
-# the batch sessionization — whose oracle it shares — only if the
-# state store merged open sessions across batches correctly.
-def _register_session_stream_oracle() -> None:
-    from ..operators.temporal import ORACLE_SQL as _TEMPORAL
-
-    ORACLE_SQL["user_sessions_stream"] = _TEMPORAL["user_sessions"]
-
-
-_register_session_stream_oracle()
 
 
 QUERIES = {
     "event_count_hourly": event_count_hourly,
-    "user_sessions_stream": _user_sessions_stream,
     "region_event_count": region_event_count,
     "trending_arrivals_batch": trending_arrivals_batch,
-    "trending_arrivals_stream": _trending_arrivals_stream,
-    "event_count_hourly_stream": _event_count_hourly_stream,
-    "event_count_hourly_late": _event_count_hourly_late,
-    "event_count_hourly_late_tolerated": _event_count_hourly_late_tolerated,
-    "region_event_count_stream": _region_event_count_stream,
     "event_count_sliding": event_count_sliding,
-    "event_count_sliding_stream": _event_count_sliding_stream,
     "events_json_stats": events_json_stats,
     "user_reach_approx": user_reach_approx,
     "heavy_users_topk": heavy_users_topk,

@@ -14,18 +14,23 @@ from hadoop_and_spark_spark.sources.mock_stream import (
     read_replay_stream,
     write_replay_files,
 )
+from hadoop_and_spark_spark.streaming import trending as T
 from hadoop_and_spark_spark.streaming import windows as W
 
+# the batch windows and their registered replay-stream twins
+_QUERIES = {**W.QUERIES, **T.QUERIES}
+_ORACLE_SQL = {**W.ORACLE_SQL, **T.ORACLE_SQL}
 
-@pytest.mark.parametrize("name", sorted(W.QUERIES))
+
+@pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_windows_vs_oracle(spark, sf_dir, name):
-    if name not in W.ORACLE_SQL:
+    if name not in _ORACLE_SQL:
         # rows-only at the driver (user_reach_approx: HLL registers
         # aren't cross-engine reproducible); pinned by
         # test_hll_reach_tracks_exact instead
-        assert W.QUERIES[name](spark, sf_dir).count() >= 1
+        assert _QUERIES[name](spark, sf_dir).count() >= 1
         return
-    ok, msg = compare(spark, sf_dir, W.QUERIES[name], W.ORACLE_SQL[name])
+    ok, msg = compare(spark, sf_dir, _QUERIES[name], _ORACLE_SQL[name])
     assert ok, f"{name}: {msg}"
 
 
@@ -649,10 +654,8 @@ def test_sliding_stream_equals_batch_and_straddles_batches(spark, sf_dir):
     2-hour span straddles a weekly batch edge). Without the second
     batch's update, max-consolidation would under-count and the
     equality half would fail too."""
-    from hadoop_and_spark_spark.streaming.trending import (
-        event_count_sliding_stream,
-        sink_table,
-    )
+    from hadoop_and_spark_spark.streaming.runtime import sink_table
+    from hadoop_and_spark_spark.streaming.trending import event_count_sliding_stream
 
     got = sorted(
         tuple(r) for r in event_count_sliding_stream(spark, sf_dir).collect()
@@ -666,7 +669,7 @@ def test_sliding_stream_equals_batch_and_straddles_batches(spark, sf_dir):
     # corpus's sink via the (tag, corpus)-keyed registry — newest-seq
     # scanning would find whichever corpus ran a sliding stream last
     # (e.g. the empty-dir totality sweep) and inspect zero rows
-    raw = sink_table(spark, sf_dir, "sliding_stream")
+    raw = sink_table(spark, sf_dir, "event_count_sliding_stream")
     multi = (
         raw.groupBy("window_start")
         .count()
@@ -722,10 +725,8 @@ def test_sink_registry_resolves_per_corpus(spark, sf_dir, tmp_path):
     import os
 
     from hadoop_and_spark_spark.catalog import TABLES
-    from hadoop_and_spark_spark.streaming.trending import (
-        event_count_sliding_stream,
-        sink_table,
-    )
+    from hadoop_and_spark_spark.streaming.runtime import sink_table
+    from hadoop_and_spark_spark.streaming.trending import event_count_sliding_stream
 
     n_real = event_count_sliding_stream(spark, sf_dir).count()
     assert n_real > 0
@@ -738,9 +739,53 @@ def test_sink_registry_resolves_per_corpus(spark, sf_dir, tmp_path):
         )
     event_count_sliding_stream(spark, ed).count()  # newer stream, 0 rows
 
-    raw = sink_table(spark, sf_dir, "sliding_stream")
+    raw = sink_table(spark, sf_dir, "event_count_sliding_stream")
     assert raw.count() > 0, "empty-corpus sink shadowed the real one"
-    assert sink_table(spark, ed, "sliding_stream").count() == 0
+    assert sink_table(spark, ed, "event_count_sliding_stream").count() == 0
+
+
+MEMORY_SINK_STREAMS = (
+    "dedup_exact_stream",
+    "dedup_bounded_stream",
+    "tier_counts_stream",
+    "purchase_click_pairs",
+    "trending_arrivals_stream",
+    "event_count_hourly_stream",
+    "event_count_hourly_late",
+    "event_count_hourly_late_tolerated",
+    "region_event_count_stream",
+    "event_count_sliding_stream",
+    "user_sessions_stream",
+)
+
+
+@pytest.mark.parametrize("name", MEMORY_SINK_STREAMS)
+def test_sink_table_resolves_by_query_name(spark, sf_dir, name):
+    """Every registered memory-sink stream's raw sink resolves under
+    its own query name once the query has run, and is a live table."""
+    from hadoop_and_spark_spark.registry import collect
+    from hadoop_and_spark_spark.streaming.runtime import sink_table
+
+    collect()[0][name](spark, sf_dir).count()
+    assert sink_table(spark, sf_dir, name).columns
+
+
+def test_late_and_tolerated_sinks_are_distinct(spark, sf_dir):
+    """The eviction and acceptance twins replay the SAME out-of-order
+    delivery, so their sinks must not alias: the late sink drops the
+    displaced week and holds strictly fewer rows than the tolerated
+    one, whichever of the two ran last."""
+    from hadoop_and_spark_spark.streaming.runtime import sink_table
+    from hadoop_and_spark_spark.streaming.trending import (
+        event_count_hourly_late,
+        event_count_hourly_late_tolerated,
+    )
+
+    event_count_hourly_late(spark, sf_dir).count()
+    event_count_hourly_late_tolerated(spark, sf_dir).count()
+    late = sink_table(spark, sf_dir, "event_count_hourly_late")
+    tol = sink_table(spark, sf_dir, "event_count_hourly_late_tolerated")
+    assert late.count() < tol.count()
 
 
 def test_session_stream_equals_batch_and_merges_across_batches(spark, sf_dir):

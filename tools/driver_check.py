@@ -6,7 +6,8 @@ columns by name, sorts rows, and hashes cells WITH their runtime types.
 Round 3 proved those can disagree (DuckDB renders DECIMAL as float64 while
 Spark keeps object(Decimal) — identical values, different hash). This tool
 reproduces that stricter comparison locally so a red driver row is caught
-before the round ends.
+before the round ends. It first runs ``entry(spark)``, the driver's
+smoke check, and fails if that returns no rows.
 
 Usage:  python tools/driver_check.py [sf_dir] [query ...]
 """
@@ -14,6 +15,7 @@ Usage:  python tools/driver_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import pandas as pd
@@ -31,7 +33,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    # pandas-UDF Python workers import the engine package themselves
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as entry
     from hadoop_and_spark_spark.oracle import duckdb_connect
     from hadoop_and_spark_spark.session import get_spark
@@ -42,6 +49,16 @@ def main() -> int:
 
     results: dict[str, str] = {}
     failed = []
+    try:
+        n_entry = len(entry.entry(spark).collect())
+        results["entry"] = (
+            f"ok ({n_entry} rows)" if n_entry else "ENTRY RETURNED NO ROWS"
+        )
+    except Exception as exc:  # noqa: BLE001
+        n_entry = 0
+        results["entry"] = f"SPARK ERROR: {exc}"
+    if not n_entry:
+        failed.append("entry")
     for name, fn in queries.items():
         if only and name not in only:
             continue
